@@ -33,92 +33,81 @@ object Bench {
     "bm25_topk" -> 1.232, // CPU scoring + group-limit
     "profile_numeric_sketch" -> 2.260) // CPU sketch (the r15 drift family)
 
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      // saveAsTable targets (bucketed-join tables) go to /tmp, not the
-      // repo-local ./spark-warehouse default (same choice as GraftSession).
-      .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse")
-      .config("spark.ui.enabled", "false")
-      // 208 queries × several codegen units ≫ the 100-entry default
-      // generated-class cache — without this, later executions pay a
-      // fixed Janino recompile per run (see GraftSession for the full
-      // note; static conf, must precede session creation)
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      // zstd shuffle/spill compression (same rationale as GraftSession:
-      // ~1.4x over lz4 on the GB-scale narrow-long dedup streams)
-      .config("spark.io.compression.codec", "zstd")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftSession.quietKnownNoise() // the part-* glob WARN trace, once per read
-    // Warm the session (codegen compiler, parquet footer reads, shuffle
-    // machinery) so the first measured query doesn't absorb JVM startup.
+  /** Warm the session (codegen compiler, parquet footer reads, shuffle
+    * machinery) so the first measured query doesn't absorb JVM startup.
+    */
+  def warmUp(spark: SparkSession, sfDir: String): Unit = {
     spark.range(1000000).selectExpr("sum(id)").collect()
     spark.read.parquet(s"$sfDir/lineitem.parquet").limit(1000)
       .groupBy("l_returnflag").count().collect()
-    val fns = SparkEntry.queries
-    // Materialize.force executes each query's OWN plan (r14: the old
-    // .count() materializer planned a derived aggregate whose optimization
-    // pruned pure-window plans down to an empty-schema scan and dropped
-    // final sorts — the window family was never being measured; see
-    // Materialize's scaladoc).
-    // best-of-3: the first execution of each distinct plan pays 0.3-2s of
-    // Janino codegen compilation plus JIT warm-up that a second run only
-    // partially absorbs (measured: several queries need 3 executions to
-    // reach steady state); the minimum is the steady-state cost a real
-    // deployment sees.
+  }
+
+  /** One query's headline measurement: best-of-3 seconds (-1 if any run
+    * failed — a failure must not masquerade as a fast run), shuffle-write
+    * MB of the last successful run (-1 if none: bytes are
+    * plan-deterministic across runs, and the drain in snapshot() keeps
+    * each delta on the right query), and the last failure's exception
+    * class + message head.
+    */
+  final case class Timing(sec: Double, shuffleMb: Double, error: Option[String])
+
+  /** Time `name` the way the headline does. Materialize.force executes
+    * each query's OWN plan (r14: the old .count() materializer planned a
+    * derived aggregate whose optimization pruned pure-window plans down to
+    * an empty-schema scan and dropped final sorts — see Materialize's
+    * scaladoc). Best-of-3: the first execution of each distinct plan pays
+    * 0.3-2s of Janino codegen compilation plus JIT warm-up that a second
+    * run only partially absorbs (measured: several queries need 3
+    * executions to reach steady state); the minimum is the steady-state
+    * cost a real deployment sees.
+    */
+  def bestOf3(spark: SparkSession, sfDir: String, name: String,
+              meter: ShuffleMeter): Timing = {
+    val fn = SparkEntry.queries(name)
+    var mb = -1.0
+    var error = Option.empty[String]
+    val times = (1 to 3).map { _ =>
+      val s0 = meter.snapshot(spark.sparkContext)
+      val t0 = System.nanoTime()
+      try {
+        Materialize.force(fn(spark, sfDir))
+        val sec = (System.nanoTime() - t0) / 1e9
+        mb = (meter.snapshot(spark.sparkContext) - s0) / 1e6
+        sec
+      }
+      catch { case e: Throwable =>
+        System.err.println(s"[bench] $name failed: ${e.getMessage}")
+        error = Some(
+          s"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("").take(160)}")
+        -1.0
+      }
+    }
+    Timing(if (times.exists(_ < 0)) -1.0 else times.min, mb, error)
+  }
+
+  def main(args: Array[String]): Unit = {
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val spark = GraftSession.local()
+    spark.sparkContext.setLogLevel("WARN")
+    GraftSession.quietKnownNoise() // the part-* glob WARN trace, once per read
+    warmUp(spark, sfDir)
     // Failure diagnostics live in the JSON itself (exception class +
     // message head per failed query), so an rc=1 round is diagnosable
     // from BENCH_r*.json alone without the stderr log (VERDICT r6).
-    val errors = scala.collection.mutable.LinkedHashMap[String, String]()
-    // per-query shuffle-write MB (r10 verdict task #3): measured on the
-    // last of the three runs — bytes are plan-deterministic across runs,
-    // and the drain in snapshot() keeps each delta on the right query
+    // Per-query shuffle-write MB: r10 verdict task #3.
     val meter = new ShuffleMeter
     spark.sparkContext.addSparkListener(meter)
-    val shuffleMb = scala.collection.mutable.LinkedHashMap[String, Double]()
     val headlineWall0 = System.nanoTime()
-    val results = SparkEntry.benchQueries.map { name =>
-      val times = (1 to 3).map { _ =>
-        val s0 = meter.snapshot(spark.sparkContext)
-        val t0 = System.nanoTime()
-        try {
-          Materialize.force(fns(name)(spark, sfDir))
-          val sec = (System.nanoTime() - t0) / 1e9
-          shuffleMb(name) = (meter.snapshot(spark.sparkContext) - s0) / 1e6
-          sec
-        }
-        catch { case e: Throwable =>
-          System.err.println(s"[bench] $name failed: ${e.getMessage}")
-          errors(name) =
-            s"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("").take(160)}"
-          -1.0 // failure marker — must not masquerade as a fast run
-        }
-      }
-      name -> (if (times.exists(_ < 0)) -1.0 else times.min)
-    }
+    val timings = SparkEntry.benchQueries.map(n => n -> bestOf3(spark, sfDir, n, meter))
     val headlineWallSec = (System.nanoTime() - headlineWall0) / 1e9
+    val results = timings.map { case (n, t) => n -> t.sec }
     val qs = results.map { case (k, v) => "\"" + k + "\":" + v }
       .mkString("{", ",", "}")
-    val shufJson = results.map { case (k, _) =>
-      "\"" + k + "\":" + f"${shuffleMb.getOrElse(k, -1.0)}%.1f"
-    }.mkString("{", ",", "}")
+    val shufJson = timings.map { case (k, t) => "\"" + k + "\":" + f"${t.shuffleMb}%.1f" }
+      .mkString("{", ",", "}")
     val failed = results.collect { case (k, v) if v < 0 => k }
     val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     val total = results.map(_._2).filter(_ >= 0).sum
-    def jstr(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
 
     // Scale smoke (opt out with SPARK_GRAFT_SCALE_SMOKE=0): heaviest
     // queries re-run on a 10x-scaled lake; ratio >> 10 flags superlinear
@@ -174,7 +163,7 @@ object Bench {
       // adaptive plan (VERDICT r12 task #5): the class ScaleAudit catches
       // only exists at 10x, so CI can't see it; hits:[] is the clean bar
       val auditHits = smoke.toSeq.sortBy(_._1).flatMap { case (k, m) =>
-        m.audit.map(h => jstr(s"$k: $h"))
+        m.audit.map(h => Json.str(s"$k: $h"))
       }
       val auditJson = s""","scale_audit":{"hits":${auditHits.mkString("[", ",", "]")}}"""
       // worst-first compact digest, re-emitted as the LAST key of the
@@ -275,15 +264,16 @@ object Bench {
             Seq.empty[String], (System.nanoTime() - t0) / 1e9)
         } catch { case e: Throwable =>
           System.err.println(s"[bench] streaming leg failed: ${e.getMessage}")
-          (s""","streaming":{"failed":${jstr(s"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("").take(160)}")}}""",
+          (s""","streaming":{"failed":${Json.str(s"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("").take(160)}")}}""",
             Seq("streaming"), (System.nanoTime() - t0) / 1e9)
         }
       } else ("", Seq.empty[String], 0.0)
 
     // failures are explicit in the JSON (a filtered-out -1 would make the
     // total look FASTER) and fail the process so no consumer can miss them
-    val errorsJson = errors.map { case (k, v) => s"${jstr(k)}:${jstr(v)}" }
-      .mkString("{", ",", "}")
+    val errorsJson = timings.collect {
+      case (k, Timing(_, _, Some(v))) => s"${Json.str(k)}:${Json.str(v)}"
+    }.mkString("{", ",", "}")
     // `wall` and `worst10` are deliberately the FINAL keys: the driver
     // keeps only the tail of stdout, so the adjudicable numbers (wall-time
     // breakdown + worst smoke ratios with their shuffle volume) must be

@@ -25,19 +25,24 @@ object GraftSession {
       "org.apache.spark.sql.execution.streaming.sinks.FileStreamSink",
       org.apache.logging.log4j.Level.ERROR)
 
-  /** Build a local session with scale-appropriate defaults. */
-  def local(cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession = {
+  /** Cores for every main's session: SPARK_GRAFT_CPUS, else one per CPU. */
+  val cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors())
+
+  /** Build a local session with scale-appropriate defaults — the one
+    * session factory behind every main and the test suite.
+    * `warehouse` is where saveAsTable targets (bucketed-join tables) land:
+    * /tmp by default, not the process cwd (the in-memory catalog means
+    * metadata is per-session; data dirs persist and are overwritten on
+    * re-create); the test suite passes a fresh temp directory.
+    */
+  def local(cores: Int = cpus,
+            warehouse: String = "/tmp/graft_warehouse"): SparkSession = {
     val session = SparkSession.builder()
       .master(s"local[$cores]")
       .appName("graft")
-      // default: one shuffle partition per core (right for the sf0.1
-      // bench lake). SPARK_GRAFT_SHUFFLE_PARTITIONS overrides for
-      // adjudication sweeps on the 100× lakes, where 16 partitions over
-      // ~14 GB force external sort/agg spill that a real cluster (whose
-      // partition count scales with the data) never sees — the
-      // copurchase_pairs time-trend adjudication of VERDICT r14 task #1
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cores.toString))
+      // one shuffle partition per core (right for the sf0.1 bench lake)
+      .config("spark.sql.shuffle.partitions", cores.toString)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -55,10 +60,7 @@ object GraftSession {
       // streams, where zstd's ~1.4x better ratio is a direct cut in
       // shuffle I/O for a few % CPU (A/B in PERF_NOTES r12)
       .config("spark.io.compression.codec", "zstd")
-      // saveAsTable targets (bucketed-join tables): keep the warehouse in
-      // /tmp, not the process cwd (the in-memory catalog means metadata is
-      // per-session; data dirs persist and are overwritten on re-create)
-      .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse")
+      .config("spark.sql.warehouse.dir", warehouse)
       .getOrCreate()
     // AFTER getOrCreate: Spark's log4j2 re-initialization during session
     // creation replaces any configuration set beforehand (verified — a

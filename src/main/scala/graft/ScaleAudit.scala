@@ -32,7 +32,7 @@ import org.apache.spark.sql.execution.SparkPlan
   * positive control) and stops clean at shuffle stages.
   *
   * [[audit]] runs inside every Bench smoke loop (VERDICT r12 task #5)
-  * and its hits land in the bench JSON under `"scale_audit"`; SmokeOne
+  * and its hits land in the bench JSON under `"scale_audit"`; `Dev smoke`
   * prints the same sweep. The standalone main remains for one-off dev
   * sweeps: runMain graft.ScaleAudit <sfDir>
   */
@@ -92,7 +92,7 @@ object ScaleAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
     val factor = if (args.length > 1) args(1).toInt else ScaleSmoke.Factor
-    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "16").toInt)
+    val spark = GraftSession.local()
     spark.sparkContext.setLogLevel("ERROR")
     val scaled = ScaleSmoke.ensureScaled(spark, sfDir, factor = factor)
     ScaleSmoke.smokeQueries.foreach { name =>

@@ -402,7 +402,7 @@ object SkewStress {
     val pos = args.filterNot(_.startsWith("--scale="))
     val sfDir = if (pos.nonEmpty) pos(0) else "/root/testdata/sf0.1"
     val hotPermille = if (pos.length > 1) pos(1).toInt else HotPermille
-    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "16").toInt)
+    val spark = GraftSession.local()
     spark.sparkContext.setLogLevel("ERROR")
     val (names, fns) = pos.drop(2).headOption match {
       case Some("--debinned") =>

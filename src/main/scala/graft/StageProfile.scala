@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerTaskEnd}
 
 /** Per-stage task profiling — the readout that adjudicates a
   * time-superlinear trend whose shuffle is clean (VERDICT r14 task #1: is
@@ -9,12 +9,11 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
   * semantic stage whose task max ≫ median; memory pressure shows up as a
   * high GC share / nonzero spill spread across tasks.
   *
-  * As of r16 the listener is a reusable [[StageProfile.Meter]] so
-  * [[SmokeOne]] can emit the same digest in-line for any flagged row
+  * The listener is a reusable [[StageProfile.Meter]] so `Dev smoke
+  * --profile` can emit the same digest in-line for any flagged row
   * (VERDICT r15 task #5 — the adjudication readout must come from the
-  * SAME run that produced the flag, not a later hand-run). Standalone:
-  *
-  *   runMain graft.StageProfile <dir> <name> [reps]
+  * SAME run that produced the flag, not a later hand-run); `Dev profile`
+  * prints it per run for named queries.
   */
 object StageProfile {
 
@@ -32,7 +31,9 @@ object StageProfile {
     def gcPct: Double = if (sumMs > 0) 100.0 * gcMs / sumMs else 0.0
   }
 
-  /** Attachable per-stage task meter. reset() between measured runs;
+  /** Attachable per-stage task meter, plus each job's wall (attributes
+    * cost to eager checkpoint jobs that never appear in the final adaptive
+    * plan). reset() between measured runs;
     * drain the listener bus first or the previous run's async task events
     * pollute the profile (same contract as SkewStress's TaskMeter).
     */
@@ -54,11 +55,26 @@ object StageProfile {
           a.durations += t.taskInfo.duration
         }
       }
-    def reset(): Unit = stages.clear()
+
+    /** job id -> (wall s, description or call site), jobs ended since reset(). */
+    val jobs = new scala.collection.concurrent.TrieMap[Int, (Double, String)]()
+    private val jobStarts = new scala.collection.concurrent.TrieMap[Int, (Long, String)]()
+    override def onJobStart(j: SparkListenerJobStart): Unit = {
+      val p = Option(j.properties)
+      val label = p.flatMap(p => Option(p.getProperty("spark.job.description")))
+        .orElse(p.flatMap(p => Option(p.getProperty("callSite.short")))).getOrElse("")
+      jobStarts(j.jobId) = (j.time, label.take(80))
+    }
+    override def onJobEnd(j: SparkListenerJobEnd): Unit =
+      jobStarts.remove(j.jobId).foreach { case (t0, label) =>
+        jobs(j.jobId) = ((j.time - t0) / 1000.0, label)
+      }
+
+    def reset(): Unit = { stages.clear(); jobs.clear() }
 
     /** One line per stage, heaviest first (by task-time sum), at most
-      * `top` stages — the compact in-line digest SmokeOne prints for a
-      * flagged row.
+      * `top` stages — the compact in-line digest `Dev smoke --profile`
+      * prints for a flagged row.
       */
     def digest(top: Int = 3): Seq[String] =
       stages.readOnlySnapshot().toSeq.sortBy(-_._2.sumMs).take(top).map {
@@ -69,33 +85,5 @@ object StageProfile {
             f"sh_rd=${a.shufReadMb}%.0fM sh_wr=${a.shufWriteMb}%.0fM " +
             f"input=${a.inputMb}%.0fM"
       }
-  }
-
-  def main(args: Array[String]): Unit = {
-    val dir = args(0)
-    val name = args(1)
-    val reps = if (args.length > 2) args(2).toInt else 2
-    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "16").toInt)
-    spark.sparkContext.setLogLevel("ERROR")
-    val meter = new Meter
-    spark.sparkContext.addSparkListener(meter)
-    val fn = SparkEntry.queries(name)
-    (1 to reps).foreach { r =>
-      org.apache.spark.GraftSparkInternals.drainListenerBus(spark.sparkContext)
-      meter.reset()
-      val t0 = System.nanoTime()
-      Materialize.force(fn(spark, dir))
-      val wall = (System.nanoTime() - t0) / 1e9
-      org.apache.spark.GraftSparkInternals.drainListenerBus(spark.sparkContext)
-      println(f"== $name rep $r/$reps wall=$wall%.2fs @ $dir ==")
-      println(f"${"stage"}%7s ${"tasks"}%6s ${"sum_s"}%8s ${"max_s"}%7s " +
-        f"${"med_s"}%7s ${"gc%"}%5s ${"spill"}%8s ${"sh_rd"}%8s ${"sh_wr"}%8s ${"input"}%8s")
-      meter.stages.toSeq.sortBy(-_._2.sumMs).foreach { case (id, a) =>
-        println(f"$id%7d ${a.n}%6d ${a.sumMs / 1000.0}%8.2f ${a.maxMs / 1000.0}%7.2f " +
-          f"${a.medMs / 1000.0}%7.2f ${a.gcPct}%5.1f ${a.spillMb}%7.0fM ${a.shufReadMb}%7.0fM " +
-          f"${a.shufWriteMb}%7.0fM ${a.inputMb}%7.0fM")
-      }
-    }
-    spark.stop()
   }
 }

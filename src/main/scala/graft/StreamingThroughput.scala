@@ -554,7 +554,7 @@ object StreamingThroughput {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val outPath = if (args.length > 1) Some(args(1)) else None
-    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
+    val spark = GraftSession.local()
     spark.sparkContext.setLogLevel("WARN")
     val scratch = "/tmp/graft_stream_tp"
     val legs = Seq(scd2Leg(spark, scratch), lshLeg(spark, sfDir, scratch),

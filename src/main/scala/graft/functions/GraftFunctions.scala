@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
 import org.apache.spark.sql.functions.{call_function, lit}
 
@@ -13,71 +14,47 @@ import org.apache.spark.sql.functions.{call_function, lit}
   */
 object GraftFunctions {
 
-  /** Register all graft functions in `spark`'s registry.
-    * createOrReplaceTempFunction is itself idempotent and cheap, so no
-    * registered-session bookkeeping (an identity-based cache here risked
-    * skipping a fresh session on hash collision and grew unboundedly).
+  /** (name, signature, builder over the call's arguments) of every graft
+    * function; a call with another arity fails naming the signature.
+    */
+  private val functions: Seq[(String, String, PartialFunction[Seq[Expression], Expression])] = Seq(
+    ("word_shingles", "word_shingles(text, n)", {
+      case Seq(text, n) => WordShingles(text, intLiteral(n, "word_shingles(text, n)"))
+    }),
+    ("array_dot", "array_dot(a, b)", { case Seq(a, b) => ArrayDot(a, b) }),
+    ("minhash_signature", "minhash_signature(text, numHashes, n)", {
+      case Seq(text, k, n) => MinhashSignature(text,
+        intLiteral(k, "minhash_signature(text, numHashes, n)"),
+        intLiteral(n, "minhash_signature(text, numHashes, n)"))
+    }),
+    ("simhash_signature", "simhash_signature(text)", { case Seq(text) => SimhashSignature(text) }),
+    ("bloom_might_contain_long", "bloom_might_contain_long(filter, value)", {
+      case Seq(f, v) => BloomMightContainLong(f, v)
+    }),
+    ("md5_prefix", "md5_prefix(s, n)", {
+      case Seq(s, n) => Md5Prefix(s, intLiteral(n, "md5_prefix(s, n)"))
+    }),
+    ("md5_permille", "md5_permille(id, salt)", {
+      case Seq(id, salt) => Md5Permille(id, stringLiteral(salt, "md5_permille(id, salt)"))
+    }))
+
+  /** Register the graft functions in `spark`'s registry, once: a function
+    * the session's own registry already holds is left as it is (a
+    * replacement logs a SimpleFunctionRegistry WARN, and every column
+    * helper calls this). The check reads the registry itself, so there is
+    * no session bookkeeping here (an identity-based cache risked skipping a
+    * fresh session on hash collision and grew unboundedly).
     */
   def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "word_shingles",
-      (exprs: Seq[Expression]) => exprs match {
-        case Seq(text, n) => WordShingles(text, intLiteral(n, "word_shingles(text, n)"))
-        case other => throw new IllegalArgumentException(
-          s"word_shingles(text, n) takes 2 arguments, got ${other.size}")
-      },
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "array_dot",
-      (exprs: Seq[Expression]) => exprs match {
-        case Seq(a, b) => ArrayDot(a, b)
-        case other => throw new IllegalArgumentException(
-          s"array_dot(a, b) takes 2 arguments, got ${other.size}")
-      },
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "minhash_signature",
-      (exprs: Seq[Expression]) => exprs match {
-        case Seq(text, k, n) => MinhashSignature(text,
-          intLiteral(k, "minhash_signature(text, numHashes, n)"),
-          intLiteral(n, "minhash_signature(text, numHashes, n)"))
-        case other => throw new IllegalArgumentException(
-          s"minhash_signature(text, numHashes, n) takes 3 arguments, got ${other.size}")
-      },
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "simhash_signature",
-      (exprs: Seq[Expression]) => exprs match {
-        case Seq(text) => SimhashSignature(text)
-        case other => throw new IllegalArgumentException(
-          s"simhash_signature(text) takes 1 argument, got ${other.size}")
-      },
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bloom_might_contain_long",
-      (exprs: Seq[Expression]) => exprs match {
-        case Seq(f, v) => BloomMightContainLong(f, v)
-        case other => throw new IllegalArgumentException(
-          s"bloom_might_contain_long(filter, value) takes 2 arguments, got ${other.size}")
-      },
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "md5_prefix",
-      (exprs: Seq[Expression]) => exprs match {
-        case Seq(s, n) => Md5Prefix(s, intLiteral(n, "md5_prefix(s, n)"))
-        case other => throw new IllegalArgumentException(
-          s"md5_prefix(s, n) takes 2 arguments, got ${other.size}")
-      },
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "md5_permille",
-      (exprs: Seq[Expression]) => exprs match {
-        case Seq(id, salt) => Md5Permille(id,
-          stringLiteral(salt, "md5_permille(id, salt)"))
-        case other => throw new IllegalArgumentException(
-          s"md5_permille(id, salt) takes 2 arguments, got ${other.size}")
-      },
-      "built-in")
+    val registry = spark.sessionState.functionRegistry
+    functions.foreach { case (name, signature, build) =>
+      if (!registry.functionExists(FunctionIdentifier(name)))
+        registry.createOrReplaceTempFunction(name,
+          (exprs: Seq[Expression]) => build.applyOrElse(exprs, (other: Seq[Expression]) =>
+            throw new IllegalArgumentException(
+              s"wrong argument count for $signature: got ${other.size}")),
+          "built-in")
+    }
   }
 
   private def intLiteral(e: Expression, ctx: String): Int = e match {

@@ -6,7 +6,7 @@ import graft.cdc.{CdcSchemas, Scd2}
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
+import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
 import org.apache.spark.sql.types.StructType
 
 /** Streaming SCD2 (SURVEY.md §2.8, §7.2 step 6).
@@ -25,7 +25,7 @@ import org.apache.spark.sql.types.StructType
   *     events) re-versionized, other keys' rows carried over untouched.
   *     At 100 TB this touches O(batch keys · versions), not O(table).
   *  3. [[incremental]] — true per-key streaming state
-  *     (flatMapGroupsWithState): holds each key's event log (bounded by
+  *     (transformWithState): holds each key's event log (bounded by
   *     retention) and re-emits corrected versions when late/out-of-order
   *     events arrive. Exactly-once via checkpoint + (id, lsn) dedupe.
   *
@@ -247,7 +247,7 @@ object Scd2Streaming {
     */
   val DefaultRetentionMs: Long = 7L * 24 * 3600 * 1000
 
-  /** Pure per-key merge step, shared by both state APIs: merge new events
+  /** Pure per-key merge step behind [[Scd2Processor]]: merge new events
     * into the prior per-key log (dedupe on lsn, within-batch AND against
     * state — a redelivered (id, lsn) can land twice in one trigger),
     * compact to the retention horizon, and emit the version rows whose
@@ -285,26 +285,9 @@ object Scd2Streaming {
     (Some(KeyState(merged)), out)
   }
 
-  /** flatMapGroupsWithState body — the LEGACY state-v1 leg, kept because
-    * its TestGroupState harness drives the direct state-bound unit tests;
-    * the flagship [[incremental]] path rides [[Scd2Processor]]
-    * (transformWithState) since r9.
-    */
-  def updateKey(id: Int, incoming: Iterator[KeyEvent],
-                state: GroupState[KeyState]): Iterator[VersionRow] =
-    updateKeyWithRetention(DefaultRetentionMs)(id, incoming, state)
-
-  def updateKeyWithRetention(retentionMs: Long)(id: Int, incoming: Iterator[KeyEvent],
-                state: GroupState[KeyState]): Iterator[VersionRow] = {
-    val (next, out) = mergeKeyEvents(retentionMs, id, incoming,
-      state.getOption.map(_.events).getOrElse(Nil))
-    next.foreach(state.update)
-    out
-  }
-
   /** The Spark-4 arbitrary-state v2 processor for [[incremental]]:
-    * per-key event log in a typed ValueState, merge logic shared with the
-    * legacy leg via [[mergeKeyEvents]]. No timer-based full eviction on
+    * per-key event log in a typed ValueState, merge logic in the pure
+    * [[mergeKeyEvents]] (unit-testable without a stream). No timer-based full eviction on
     * purpose: the highest-lsn event is the OPEN-interval anchor — evicting
     * an idle key would orphan its open version, so a returning key could
     * no longer close the prior interval (the horizon compaction inside

@@ -32,17 +32,9 @@ object SparkSuite {
       } catch { case _: java.io.IOException => () } // best-effort at exit
     }))
 
-  lazy val session: SparkSession = {
-    val wh = java.nio.file.Files.createTempDirectory("graft-warehouse")
-    SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.sql.warehouse.dir", wh.toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-  }
+  /** The production session (GraftSession.local: AQE, zstd, codegen
+    * cache, SPARK_GRAFT_CPUS cores) over a throwaway warehouse.
+    */
+  lazy val session: SparkSession =
+    GraftSession.local(warehouse = scratchDir("graft-warehouse"))
 }

@@ -280,6 +280,20 @@ class FunctionsSpec extends SparkSuite {
     }
   }
 
+  test("a second register leaves the registered builders unchanged") {
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    val names = Seq("word_shingles", "array_dot", "minhash_signature", "simhash_signature",
+      "bloom_might_contain_long", "md5_prefix", "md5_permille")
+    val registry = spark.sessionState.functionRegistry
+    def builders = names.map(n => registry.lookupFunctionBuilder(FunctionIdentifier(n)))
+    GraftFunctions.register(spark)
+    val first = builders
+    assert(first.forall(_.isDefined), s"unregistered: ${names.zip(first).filter(_._2.isEmpty)}")
+    GraftFunctions.register(spark)
+    assert(builders.zip(first).forall { case (b, a) => b.get eq a.get },
+      "a repeated register must not replace an installed builder")
+  }
+
   private def withSQLConf(pairs: (String, String)*)(body: => Unit): Unit = {
     val conf = spark.conf
     val olds = pairs.map { case (k, _) => k -> conf.getOption(k) }

@@ -227,15 +227,10 @@ class Scd2StreamingSpec extends SparkSuite {
     assert(spark.read.parquet(s"$dir/batch=7").count() == 2)
   }
 
-  test("per-key state is compacted to the retention horizon") {
+  test("per-key state is compacted to the retention horizon") { withRocksDb {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[Scd2Streaming.KeyEvent]
-    val out = input.toDS()
-      .groupByKey(_.id)
-      .flatMapGroupsWithState(
-        org.apache.spark.sql.streaming.OutputMode.Append,
-        org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout())(
-        Scd2Streaming.updateKeyWithRetention(retentionMs = 1000L))
+    val out = Scd2Streaming.incremental(input.toDS(), retentionMs = 1000L)
     val q = out.writeStream.format("memory").queryName("ret_out")
       .outputMode("append").start()
 
@@ -258,7 +253,7 @@ class Scd2StreamingSpec extends SparkSuite {
     assert(last.map(_.lsn).takeRight(2) == Seq(40L, 50L))
     assert(last.find(_.lsn == 40).get.rowValidExpirationMs == t0 + 100500)
     assert(last.find(_.lsn == 50).get.rowValidExpirationMs == Scd2Streaming.SentinelMs)
-  }
+  }}
 
   test("incremental mode under RocksDB state store: skewed hot key, bounded state") {
     // the 100 TB state-store configuration (round-2 advice): the per-key
@@ -271,12 +266,7 @@ class Scd2StreamingSpec extends SparkSuite {
     try {
       implicit val sqlCtx = spark.sqlContext
       val input = MemoryStream[Scd2Streaming.KeyEvent]
-      val out = input.toDS()
-        .groupByKey(_.id)
-        .flatMapGroupsWithState(
-          org.apache.spark.sql.streaming.OutputMode.Append,
-          org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout())(
-          Scd2Streaming.updateKeyWithRetention(retentionMs = 1000L))
+      val out = Scd2Streaming.incremental(input.toDS(), retentionMs = 1000L)
       val q = out.writeStream.format("memory").queryName("rocks_out")
         .outputMode("append").start()
 
@@ -322,25 +312,19 @@ class Scd2StreamingSpec extends SparkSuite {
   }
 
   test("per-key state size is bounded by the retention horizon (direct)") {
-    // drive the state function through TestGroupState: after 10 batches of
-    // a hot key, retained state must hold only the horizon's worth of
+    // drive the pure merge step the state processor runs: after 10 batches
+    // of a hot key, retained state must hold only the horizon's worth of
     // events (+ the open-interval anchor), not the full history
-    import org.apache.spark.api.java.Optional
-    import org.apache.spark.sql.streaming.TestGroupState
-    var state = TestGroupState.create[Scd2Streaming.KeyState](
-      Optional.empty(), org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout(),
-      0L, Optional.empty[Long](), false)
+    var state = List.empty[(Long, Long, Map[String, String])]
     for (b <- 0 until 10) {
       val batch = (0 until 20).map { j =>
         val i = b * 20 + j
         Scd2Streaming.KeyEvent(1, 1000L + i, t0 + i * 40L, Map("name" -> s"h$i"), "u")
       }
-      Scd2Streaming.updateKeyWithRetention(retentionMs = 1000L)(1, batch.iterator, state).length
-      state = TestGroupState.create[Scd2Streaming.KeyState](
-        Optional.of(state.get), org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout(),
-        0L, Optional.empty[Long](), false)
+      val (next, _) = Scd2Streaming.mergeKeyEvents(1000L, 1, batch.iterator, state)
+      next.foreach(ks => state = ks.events)
     }
-    val retained = state.get.events.size
+    val retained = state.size
     // horizon = 1000 ms / 40 ms spacing = ~26 events; full history is 200
     assert(retained <= 30,
       s"state must be bounded by the retention horizon, held $retained of 200 events")
@@ -351,9 +335,8 @@ class Scd2StreamingSpec extends SparkSuite {
       "under RocksDB, chain stays contiguous across compaction") {
     // r9: the flagship incremental path moved to the Spark-4
     // transformWithState surface (Scd2Processor + typed ValueState); this
-    // pins the same contract the legacy-leg tests pin — one state row per
-    // key, horizon-bounded log, contiguous validity chain — through the
-    // NEW path end-to-end.
+    // pins one state row per key, horizon-bounded log and a contiguous
+    // validity chain through that path end-to-end.
     spark.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     try {
